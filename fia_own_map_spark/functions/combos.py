@@ -11,19 +11,22 @@ Reference semantics:
 
 Implementation is native Catalyst higher-order functions (transform / filter
 with index / array_sort / array_join) — no Python until the final metaphone
-pandas UDF, which runs *after* ``explode`` so it is a scalar string->string
-Arrow batch, and only over **distinct** fingerprints (dedup-before-UDF cuts
-the Python work by the key-repetition factor).
+step, a ``mapInPandas`` over the **distinct** fingerprints (dedup-before-UDF
+cuts the Python work by the key-repetition factor). ``MapInPandas`` is a
+plan barrier that predicate pushdown does not cross, so double metaphone
+runs exactly once per distinct fingerprint.
 """
 
 from __future__ import annotations
 
 import itertools
+from collections.abc import Iterator
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fia_own_map_spark.functions.phonetic import dm_primary, double_metaphone
+from fia_own_map_spark.functions.phonetic import double_metaphone
 
 
 def token_combinations(tokens: Column | str) -> Column:
@@ -56,6 +59,16 @@ def with_blocking_fingerprints(
     return df.withColumn(out_col, normalized_name_keys(tokens_col))
 
 
+def _dm_primary_nonempty(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(_fp, _code) with the primary double-metaphone code of each ``_fp``;
+    rows whose code is empty are dropped here, in Python, so no Spark
+    predicate references the code."""
+    for pdf in batches:
+        codes = pdf["_fp"].map(lambda v: double_metaphone(v)[0])
+        keep = codes.str.len() > 0
+        yield pd.DataFrame({"_fp": pdf["_fp"][keep], "_code": codes[keep]})
+
+
 def exploded_metaphone_keys(
     df: DataFrame,
     id_col: str = "url",
@@ -64,37 +77,45 @@ def exploded_metaphone_keys(
 ) -> DataFrame:
     """(id, block_key) edge list: explode fingerprints, metaphone-encode.
 
-    The metaphone pandas UDF is applied to the **distinct** fingerprint set and
-    broadcast-joined back — at web scale fingerprints repeat heavily (that is
-    the whole point of blocking), so this bounds Python work by the number of
+    Double metaphone runs once per **distinct** fingerprint and the codes
+    are joined back — at web scale fingerprints repeat heavily (that is the
+    whole point of blocking), so this bounds Python work by the number of
     distinct names, not the number of rows.
+
+    The encoding is a ``mapInPandas`` that also drops empty codes, not a
+    scalar UDF followed by ``filter(length(key) > 0)``. Catalyst pushes a
+    filter on a UDF's output through Project/Repartition/Aggregate by alias
+    substitution and infers it across the ``_fp`` equi-join, so that shape
+    evaluated the UDF three times, twice over every exploded row.
+    ``MapInPandas`` is a barrier that neither pushdown nor constraint
+    inference crosses, so the plan holds exactly one Python operator and
+    nothing is filtered after the join.
     """
     exploded = df.select(
         F.col(id_col), F.explode(fingerprint_col).alias("_fp")
     ).filter(F.length("_fp") > 0)
     # dedup first (map-side partial aggregation shrinks the shuffle by the
     # fingerprint-repetition factor — the point of dedup-before-UDF), then
-    # pin the UDF stage's width with a ROUND-ROBIN repartition. The pin must
-    # be round-robin: a hash repartition on _fp at the job shuffle width is
-    # provably redundant with the distinct's own exchange, so Catalyst
+    # pin the Python stage's width with a ROUND-ROBIN repartition. The pin
+    # must be round-robin: a hash repartition on _fp at the job shuffle width
+    # is provably redundant with the distinct's own exchange, so Catalyst
     # COLLAPSES it (verified in plans/r08/er_blocking_keys_before.txt: the
     # only exchange is ENSURE_REQUIREMENTS), and ENSURE_REQUIREMENTS
     # exchanges are exactly what AQE's size-based coalescing folds to one
     # partition — a few MB of distinct fingerprints would run the per-ROW-
-    # cost metaphone UDF single-threaded. REPARTITION_BY_NUM round-robin
+    # cost metaphone step single-threaded. REPARTITION_BY_NUM round-robin
     # survives both the optimizer and AQE, and it moves only the already-
     # deduped slim fingerprint table.
     width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    distinct_fp = (
+    codes = (
         exploded.select("_fp")
         .distinct()
         .repartition(width)
-        .withColumn(key_col, dm_primary("_fp"))
+        .mapInPandas(_dm_primary_nonempty, "_fp string, _code string")
     )
     return (
-        exploded.join(distinct_fp, "_fp")
-        .filter(F.length(key_col) > 0)
-        .select(id_col, key_col)
+        exploded.join(codes, "_fp")
+        .select(id_col, F.col("_code").alias(key_col))
         .distinct()
     )
 

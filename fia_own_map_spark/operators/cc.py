@@ -28,17 +28,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Undirected edge set, canonical (min, max) orientation, no self-loops."""
-    return (
-        edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """min(N(u) ∪ u) via groupBy + join, deliberately NOT a window: the
     hub of a large component has degree ≈ component size, and a window over
@@ -110,7 +99,7 @@ def connected_components(
     row per id (a primary-key projection) — skips the defensive distinct,
     one exchange of the full vertex set.
     """
-    # Round 0 IS a small-star pass, replacing the old _canonical step:
+    # Round 0 IS a small-star pass; no separate canonicalization step:
     # _small_star's own orient + self-loop filter + distinct subsume
     # canonicalization for ANY input (component-preserving by the Kiveris
     # operator property), and on star-shaped inputs — blocking's

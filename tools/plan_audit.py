@@ -54,8 +54,10 @@ AUDITED = [
     ("dedup_simhash_pairs",
      ["ArrowEvalPython|BatchEvalPython",
       "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin", "!CartesianProduct"]),
-    # r4: second key family — JVM soundex expr + metaphone Arrow UDF
-    ("er_blocking_keys_soundex", ["soundex", "ArrowEvalPython|BatchEvalPython"]),
+    # r4: second key family — JVM soundex expr + batched Arrow metaphone
+    # step (a mapInPandas barrier, so the step runs once per distinct key)
+    ("er_blocking_keys_soundex",
+     ["soundex", "ArrowEvalPython|BatchEvalPython|MapInPandas"]),
     # r5: HLL registers — all-native exprs (xxhash64 + bin), partial max on
     # (group, bucket) before the shuffle; no UDF anywhere in the sketch
     ("sketch_hll_custkeys",
